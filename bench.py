@@ -29,8 +29,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 _HISTORY_MIN_ROUND = 8
 
 
-def _history_files(here: str):
-    """The BENCH_r*.json paths eligible for history scans, sorted by name."""
+def _history(here: str, cpus=None) -> list:
+    """The readable BENCH_r*.json records eligible for history scans, in
+    file-name (round) order. With ``cpus`` set, a record whose own ``cpus``
+    field names another core count is dropped: the glob also matches
+    other-core legs of a round (``BENCH_r15_c8.json``), and their timings
+    are not comparable — the record says which leg it is, the file name
+    need not. Records without a ``cpus`` field are kept."""
     import glob
 
     out = []
@@ -38,11 +43,19 @@ def _history_files(here: str):
         m = re.search(r"BENCH_r(\d+)\.json$", path)
         if m and int(m.group(1)) < _HISTORY_MIN_ROUND:
             continue
-        out.append(path)
+        try:
+            with open(path) as fh:
+                data = json.load(fh)
+        except Exception:  # noqa: BLE001 — history damage must not kill the record
+            continue
+        rec_cpus = data.get("cpus") or (data.get("parsed") or {}).get("cpus")
+        if cpus is not None and rec_cpus is not None and int(rec_cpus) != int(cpus):
+            continue
+        out.append(data)
     return out
 
 
-def _trailing_values(sf, here=None, key="queries") -> dict:
+def _trailing_values(sf, here=None, key="queries", cpus=None) -> dict:
     """Per-query timing SERIES (round order, oldest first) over the last 3
     rounds' driver-recorded bench files AT THE SAME SCALE FACTOR — timings
     from a different SF would make every query look like an outlier, or
@@ -51,19 +64,12 @@ def _trailing_values(sf, here=None, key="queries") -> dict:
     ("queries" or "gates" — the gate replay pass needs its own history,
     round-10 lesson: the knn_recall gate recorded 21.94 s in a VM-pressure
     window with no in-record exoneration because the replay pass covered
-    only "queries"). Pre-r8 rounds are excluded (_HISTORY_MIN_ROUND)."""
+    only "queries"). Pre-r8 rounds and other-core legs are excluded
+    (:func:`_history`)."""
     hist: dict = {}
     if here is None:
         here = os.path.dirname(os.path.abspath(__file__))
-    candidates = []
-    for path in _history_files(here):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except Exception:  # noqa: BLE001
-            continue
-        if data.get("sf") == sf:
-            candidates.append(data)
+    candidates = [d for d in _history(here, cpus) if d.get("sf") == sf]
     for data in candidates[-3:]:
         # driver-written BENCH_r*.json nests the bench line under "parsed"
         # ({"n":…,"rc":…,"sf":…,"parsed":{"queries":…}}); a bare bench.py
@@ -77,13 +83,14 @@ def _trailing_values(sf, here=None, key="queries") -> dict:
     return hist
 
 
-def _trailing_medians(sf, here=None, key="queries") -> dict:
+def _trailing_medians(sf, here=None, key="queries", cpus=None) -> dict:
     """Median of :func:`_trailing_values` per query — the reference point
     for the outlier-replay pass."""
     import statistics
 
     return {
-        k: statistics.median(v) for k, v in _trailing_values(sf, here, key).items()
+        k: statistics.median(v)
+        for k, v in _trailing_values(sf, here, key, cpus).items()
     }
 
 
@@ -116,7 +123,7 @@ def _is_creeping(best, med, series) -> bool:
     )
 
 
-def _healthy_sentinel_floor(here=None):
+def _healthy_sentinel_floor(here=None, cpus=None):
     """This machine's noise-sentinel FLOOR: the minimum sample across every
     trailing driver-recorded bench round's ``noise`` array (the sentinel is
     a fixed CPU-bound job, so its floor is scale-factor-independent — all
@@ -126,16 +133,11 @@ def _healthy_sentinel_floor(here=None):
     band rather than drifting with the weather the way a median would.
     Returns None with no usable history (the gate then degrades to
     ratio=1.0 / no wait — a fresh clone must not stall the sweep).
-    Pre-r8 rounds are excluded (_HISTORY_MIN_ROUND)."""
+    Pre-r8 rounds and other-core legs are excluded (:func:`_history`)."""
     if here is None:
         here = os.path.dirname(os.path.abspath(__file__))
     samples = []
-    for path in _history_files(here):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except Exception:  # noqa: BLE001
-            continue
+    for data in _history(here, cpus):
         noise = data.get("noise") or (data.get("parsed") or {}).get("noise") or []
         # plausibility clamp: the sentinel is a fixed 50M-row hash-sum on
         # 32 threads — nothing real lands below ~0.03 s or above ~2 s on
@@ -237,7 +239,7 @@ def main() -> None:
     # window must not stall the driver, it gets attributed via the
     # normalized twins instead. The gate sits BEFORE the headline: the
     # headline is the number the gate exists to protect.
-    sentinel_floor = _healthy_sentinel_floor()
+    sentinel_floor = _healthy_sentinel_floor(cpus=cpus)
     if sentinel_floor and noise[0] > 2.0 * sentinel_floor:
         time.sleep(float(os.environ.get("SPARK_GRAFT_SENTINEL_WAIT", "60")))
         noise.append(_noise_probe())
@@ -475,7 +477,7 @@ def main() -> None:
 
     # one history read serves both the outlier pass (medians) and the
     # creep pass (series) — _trailing_medians is just median-of-series
-    history = _trailing_values(sf)
+    history = _trailing_values(sf, cpus=cpus)
     medians = {k: _stats.median(v) for k, v in history.items()}
     # first-appearance fallback reference (r14 verdict item 4): a name with
     # no trailing cross-round median had NO outlier protection, and
@@ -544,7 +546,7 @@ def main() -> None:
     # exactly when a replay-min is most informative (r13: knn_recall
     # 14.91 s at sentinel_ratio 2.618 sat just under 2×7.89 and got no
     # replay, making the number unfalsifiable from the record alone).
-    gate_medians = _trailing_medians(sf, key="gates")
+    gate_medians = _trailing_medians(sf, key="gates", cpus=cpus)
     for name, best in sorted(gates.items()):
         med = gate_medians.get(name)
         if best is None or med is None or name not in QUERIES:
@@ -670,12 +672,7 @@ def main() -> None:
         # leaves only when the line physically cannot hold it (fastest
         # sticky names shed first). Full timings always in BENCH_DETAIL.
         prev_names = set()
-        for p in _history_files(os.path.dirname(os.path.abspath(__file__))):
-            try:
-                with open(p) as fh:
-                    d = json.load(fh)
-            except Exception:  # noqa: BLE001 — history damage must not kill the record
-                continue
+        for d in _history(os.path.dirname(os.path.abspath(__file__)), cpus):
             if (d.get("sf") or (d.get("parsed") or {}).get("sf")) != sf:
                 continue
             q = d.get("queries") or (d.get("parsed") or {}).get("queries") or {}

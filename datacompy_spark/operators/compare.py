@@ -570,7 +570,15 @@ class SparkCompare:
                 ) | self._any_mismatch_pred()
                 exc = observed.filter(pred).persist(StorageLevel.MEMORY_AND_DISK)
                 self.__dict__["_exceptions"] = exc
-                exc.count()  # populate the cache; metrics collect in-flight
+                try:
+                    exc.count()  # populate the cache; metrics collect in-flight
+                except BaseException:
+                    # undo the memo: left bound, it would pin a persisted but
+                    # unpopulated cache with no _stats, and every retry would
+                    # return early above instead of running the pass again
+                    exc.unpersist()
+                    self.__dict__.pop("_exceptions", None)
+                    raise
                 stats = {k: (0 if v is None else v) for k, v in obs.get.items()}
                 self._warn_if_hot_key(stats)
                 self.__dict__["_stats"] = stats

@@ -20,6 +20,7 @@ the driver.
 from __future__ import annotations
 
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,7 +37,7 @@ from datacompy_spark.functions.hashing import (
 )
 from datacompy_spark.functions.text import normalize, tokens
 from datacompy_spark.plans.barrier import lineage_barrier
-from datacompy_spark.plans.cache import tracked_persist
+from datacompy_spark.plans.cache import release, tracked_persist
 
 # NOTE on staging: expensive scalar expressions (normalize → regexes, md5)
 # are materialized as real columns in their own projections before any
@@ -99,13 +100,21 @@ def collapse_exact_content(df: DataFrame, id_col: str, text_col: str, eager: boo
     corpus scan + regex tokenization + md5 — measured as a full duplicate
     tokenize pass per extra consumer at sf0.1. Callers therefore don't
     (and shouldn't) persist `members` themselves; it is a narrow
-    projection of this cache."""
+    projection of this cache. The cache is tracked, so
+    :func:`~datacompy_spark.plans.cache.release_caches` frees it."""
+    members, reps, _ = _collapse(df, id_col, text_col, eager)
+    return members, reps
+
+
+def _collapse(df: DataFrame, id_col: str, text_col: str, eager: bool):
+    """:func:`collapse_exact_content` plus the persisted frame behind it,
+    for callers that release it themselves."""
     from datacompy_spark.plans.partitioning import fan_out
 
     staged = fan_out(
         df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks"))
     ).select("doc_id", "toks", F.md5(F.concat_ws("\x1f", "toks")).alias("chash"))
-    staged = staged.persist()
+    staged = tracked_persist(staged)
     # eager=False (r14): callers whose FIRST action is a single-lineage
     # descendant of this cache (minhash: banded.count(); simhash:
     # sigs.count()) populate it as part of that action — an eager count
@@ -119,7 +128,7 @@ def collapse_exact_content(df: DataFrame, id_col: str, text_col: str, eager: boo
     reps = staged.groupBy("chash").agg(
         F.min("doc_id").alias("doc_id"), F.min_by("toks", "doc_id").alias("toks")
     )
-    return members, reps
+    return members, reps, staged
 
 
 def minhash_signatures(
@@ -132,80 +141,75 @@ def minhash_signatures(
     )
 
 
-def minhash_lsh_pairs(
+class _Sketches(NamedTuple):
+    """One batch's MinHash sketch pass (:func:`_sketch`)."""
+
+    #: (doc_id, chash) for every document
+    members: DataFrame
+    #: (doc_id, chash, shingles, shash), one row per exact-content
+    #: representative
+    base: DataFrame
+    #: (doc_id, band, bkey), one row per representative per band
+    banded: DataFrame
+    #: the persisted frames behind the three above, for :func:`release`
+    caches: tuple
+
+
+def _sketch(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash + LSH banding, Jaccard-verified.
+    num_hashes: int,
+    bands: int,
+    shingle_k: int,
+) -> _Sketches:
+    """Stages 0–1 of :func:`minhash_lsh_pairs`: collapse exact-content
+    duplicates, then shingle, hash and band the representatives ONCE.
+    Every MinHash route over a batch — the self-pairs, a corpus probe, a
+    ledger append — reads these caches instead of re-deriving them from
+    the raw text.
 
-    Stages: (0) collapse exact-content duplicates (identical token
-    sequences) to one representative each — k identical documents share
-    every band bucket, so without this an adversarial corpus turns each
-    bucket join into k² candidates; LSH only ever sees distinct content,
-    and the duplicate groups are re-expanded into output pairs afterwards
-    (identical content ⇒ Jaccard exactly 1.0, and a member pair qualifies
-    iff its representative pair does, so output is unchanged);
-    (1) per-representative shingle set + signature (narrow); (2) explode
-    band keys and self-join per (band, key) bucket — a shuffle on
-    uniformly-distributed md5 keys; (3) exact Jaccard on the candidate
-    pairs' distinct shingle sets; emit pairs ≥ threshold, deduped across
-    bands."""
-    rows_per_band = num_hashes // bands
-    # ---- stage 0: exact-content collapse --------------------------------
-    # eager=False: banded.count() below materializes the whole
-    # staged→base→banded cache chain in ONE serial action (r14 — was three)
-    members, reps = collapse_exact_content(df, id_col, text_col, eager=False)
-    # members is a narrow projection of collapse's eager cache — no extra persist
+    NULL text sketches as the empty document (shingle set ``{""}``): NULL
+    and empty text share one exact-content group already (same ``chash``),
+    so a ledger stores the same sketch whichever of them is the group's
+    representative."""
+    members, reps, staged = _collapse(df, id_col, text_col, eager=False)
     # Persist the per-representative sketches: Spark re-evaluates projection
     # expressions per JOINED ROW in self-joins, so without materialization the
     # shingling/minhash work would run once per candidate pair instead of
     # once per document.
-    base = (
+    toks = F.coalesce(F.col("toks"), F.array(F.lit("")))
+    base = tracked_persist(
         reps.select(
             "doc_id",
             "chash",
-            F.array_distinct(word_shingles(F.col("toks"), shingle_k)).alias(
-                "shingles"
-            ),
-        )
-        .select(
+            F.array_distinct(word_shingles(toks, shingle_k)).alias("shingles"),
+        ).select(
             "doc_id",
             "chash",
             "shingles",
             shingle_hashes(F.col("shingles")).alias("shash"),
         )
-        .persist()
     )
-    # no count() here (r14): `banded` below is a single-lineage descendant —
-    # its count() computes through this cache and populates it on the way,
-    # so the self-join still reads a warm cache (the race the old eager
-    # count guarded against needs an action that fans out BEFORE any
-    # materialization; banded.count() cannot, it is serial)
-    sig = base.withColumn(
-        "signature", minhash_from_hashes(F.col("shash"), num_hashes)
-    )
-    keys = lsh_band_keys(F.col("signature"), bands, rows_per_band)
     # band rows carry only (doc_id, band, bkey) — shingle arrays never enter
-    # the bucket shuffle
-    banded = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), k.alias("bkey"))
-                    for b, k in enumerate(keys)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.bkey").persist()
+    # the bucket shuffle. Their count() is the single serial action that
+    # populates the whole staged→base→banded cache chain (r14 — was three):
+    # the race an eager count upstream would guard against needs an action
+    # that fans out BEFORE any materialization, and this one cannot.
+    banded = tracked_persist(_band_key_rows(base, num_hashes, bands))
     banded.count()
-    a, b = banded.alias("a"), banded.alias("b")
+    return _Sketches(members, base, banded, (staged, base, banded))
+
+
+def _sketch_pairs(
+    sk: _Sketches, threshold: float, checkpoint_dir: str | None
+) -> DataFrame:
+    """Stages 2–3 of :func:`minhash_lsh_pairs` over already-built sketches:
+    band-bucket self-join, exact Jaccard on the candidates, then the
+    re-expansion of exact-duplicate groups into member pairs
+    ``(id_a, id_b, jaccard)``."""
+    base, members = sk.base, sk.members
+    a, b = sk.banded.alias("a"), sk.banded.alias("b")
     cand = (
         a.join(
             b,
@@ -270,6 +274,36 @@ def minhash_lsh_pairs(
         .filter(F.lit(1.0) >= F.lit(threshold))
     )
     return cross.unionAll(within)
+
+
+def minhash_lsh_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int = 16,
+    bands: int = 4,
+    shingle_k: int = 3,
+    threshold: float = 0.5,
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Near-duplicate pairs via MinHash + LSH banding, Jaccard-verified.
+
+    Stages: (0) collapse exact-content duplicates (identical token
+    sequences) to one representative each — k identical documents share
+    every band bucket, so without this an adversarial corpus turns each
+    bucket join into k² candidates; LSH only ever sees distinct content,
+    and the duplicate groups are re-expanded into output pairs afterwards
+    (identical content ⇒ Jaccard exactly 1.0, and a member pair qualifies
+    iff its representative pair does, so output is unchanged);
+    (1) per-representative shingle set + signature (narrow); (2) explode
+    band keys and self-join per (band, key) bucket — a shuffle on
+    uniformly-distributed md5 keys; (3) exact Jaccard on the candidate
+    pairs' distinct shingle sets; emit pairs ≥ threshold, deduped across
+    bands. The sketch caches of stages 0–1 are tracked:
+    :func:`~datacompy_spark.plans.cache.release_caches` frees them once
+    the returned pairs are consumed."""
+    sk = _sketch(df, id_col, text_col, num_hashes, bands, shingle_k)
+    return _sketch_pairs(sk, threshold, checkpoint_dir)
 
 
 def _simhash_by_vote(staged: DataFrame, carry_cols) -> DataFrame:
@@ -860,9 +894,18 @@ def connected_components(
     ``rounds``, ``doubling_from`` (round index where pointer doubling
     engaged, or None) and ``changed_history`` — the numbers behind the
     convergence claims in SCALING.md."""
+    # both directions from ONE read of `pairs`: a self-union would plan and
+    # run the whole upstream pair pipeline twice
     edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
         .distinct()
         .persist()
     )
@@ -1300,8 +1343,9 @@ def _content_hash(text: "F.Column"):
 
 
 def _shingle_base(df: DataFrame, id_col: str, text_col: str, shingle_k: int) -> DataFrame:
-    """(doc_id, shingles, shash) — the per-document sketch base shared by
-    the incremental near-dup routes."""
+    """(doc_id, shingles, shash) — the per-document sketch base of text
+    that is not collapsed first: the incremental corpus side and
+    :func:`minhash_index`."""
     return (
         df.select(F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks"))
         .select(
@@ -1377,12 +1421,18 @@ def incremental_dedup(
       guard from :func:`minhash_lsh_pairs`) band-join against corpus band
       keys — candidate generation is (batch band rows) × (matching corpus
       bucket rows), never corpus×corpus — and candidates are verified with
-      the exact shingle-set Jaccard. Batch-internal near-dups among the
-      corpus-clean remainder reuse :func:`minhash_lsh_pairs` +
-      :func:`connected_components` (component minimum survives). At a real
-      deployment the corpus's ``(doc_id, band, bkey)`` and shingle tables
-      would be precomputed once and stored (they are pure functions of the
-      text); this function derives them inline for self-containment.
+      the exact shingle-set Jaccard. The batch is sketched ONCE: the same
+      persisted representative sketches (shingles, hashes, band keys)
+      drive the corpus probe and the batch-internal near-dup pairs (stages
+      2–3 of :func:`minhash_lsh_pairs`, run over those sketches rather
+      than over the raw text a second time), and
+      :func:`connected_components` resolves the corpus-clean remainder
+      (component minimum survives). The batch sketch caches are tracked:
+      :func:`~datacompy_spark.plans.cache.release_caches` frees them once
+      the verdicts are consumed. At a real deployment the corpus's
+      ``(doc_id, band, bkey)`` and shingle tables would be precomputed
+      once and stored (they are pure functions of the text); this
+      function derives them inline for self-containment.
 
     ``method='editdist'`` (typo-level semantics, Levenshtein ≤ ``max_dist``
       on the normalized ``prefix_len``-char key):
@@ -1452,74 +1502,39 @@ def incremental_dedup(
             batch, id_col, text_col, max_dist=max_dist, prefix_len=prefix_len,
             checkpoint_dir=checkpoint_dir, _keys=bkeys,
         )
-        dup_ids = rep_hits.select(F.col("doc_id").alias("id_a"))
-        clean_pairs = pairs.join(dup_ids, "id_a", "left_anti").join(
-            dup_ids.withColumnRenamed("id_a", "id_b"), "id_b", "left_anti"
-        )
-        comp = assign_components(
-            batch.select(F.col(id_col).alias("doc_id")).join(
-                rep_hits.select("doc_id"), "doc_id", "left_anti"
-            ),
-            "doc_id",
-            clean_pairs,
-            checkpoint_dir=checkpoint_dir,
-        )
-        clean = comp.select(
-            "doc_id",
-            F.when(F.col("doc_id") != F.col("component"), F.lit("dup_batch"))
-            .otherwise(F.lit("new"))
-            .alias("verdict"),
-            F.when(F.col("doc_id") != F.col("component"), F.col("component")).alias(
-                "match_id"
-            ),
-        )
-        return rep_hits.select(
-            "doc_id",
-            F.lit("dup_corpus").alias("verdict"),
-            F.col("corpus_match").alias("match_id"),
-        ).unionByName(clean)
+        return _batch_verdicts(batch, id_col, rep_hits, pairs, checkpoint_dir)
 
     # ---- minhash route --------------------------------------------------
-    def _shingle_table(df: DataFrame) -> DataFrame:
-        return _shingle_base(df, id_col, text_col, shingle_k)
-
-    def _band_keys_of(base: DataFrame) -> DataFrame:
-        return _band_key_rows(base, num_hashes, bands)
-
-    # batch side: collapse exact-content duplicates before banding (the
-    # hot-bucket guard), then band the representatives only
-    members, reps = collapse_exact_content(batch, id_col, text_col)
-    # members is a narrow projection of collapse's eager cache — no extra persist
-    rep_docs = reps.select("doc_id", F.concat_ws(" ", "toks").alias("__text"))
-    bbase = _shingle_table(
-        rep_docs.select(F.col("doc_id").alias(id_col), F.col("__text").alias(text_col))
-    ).persist()
-    bbase.count()  # materialize before the joins: sketches compute once
-    bband = _band_keys_of(bbase)
+    # batch side: ONE sketch pass over the exact-content representatives
+    # (the hot-bucket guard) feeds the corpus probe, the verification and
+    # the batch-internal pairs
+    sk = _sketch(batch, id_col, text_col, num_hashes, bands, shingle_k)
 
     # corpus pass 1: band keys for every corpus doc (narrow scan → explode;
     # at a real deployment this (doc_id, band, bkey) table is precomputed
     # and stored — it is a pure function of the text)
-    cband = _band_keys_of(_shingle_table(corpus))
+    cband = _band_key_rows(
+        _shingle_base(corpus, id_col, text_col, shingle_k), num_hashes, bands
+    )
     # candidate generation: batch band rows meet only their corpus bucket —
     # the corpus never self-joins. Batch-side band rows are small; the join
     # shuffles the corpus band stream once on (band, bkey).
     cand = (
-        bband.select(F.col("doc_id").alias("b_id"), "band", "bkey").join(
+        sk.banded.select(F.col("doc_id").alias("b_id"), "band", "bkey").join(
             cband.select(F.col("doc_id").alias("c_id"), "band", "bkey"),
             ["band", "bkey"],
         )
     ).select("b_id", "c_id").dropDuplicates(["b_id", "c_id"])
     cand = lineage_barrier(cand, checkpoint_dir, eager=False)
-    sh_b = bbase.select(F.col("doc_id").alias("b_id"), "shingles")
+    sh_b = sk.base.select(F.col("doc_id").alias("b_id"), "shingles")
     # corpus pass 2 (verification) computes shingles ONLY for candidate
     # docs: semi-join the raw corpus down to the candidate id set FIRST,
     # then shingle the survivors — the candidate set is batch-driven and
     # small, so the expensive array construction never runs corpus-wide
     # a second time (and no corpus-wide shingle shuffle exists at all).
     cand_ids = cand.select(F.col("c_id").alias(id_col)).dropDuplicates()
-    sh_c = _shingle_table(
-        corpus.join(cand_ids, id_col, "left_semi")
+    sh_c = _shingle_base(
+        corpus.join(cand_ids, id_col, "left_semi"), id_col, text_col, shingle_k
     ).select(F.col("doc_id").alias("c_id"), F.col("shingles").alias("c_shingles"))
     inter = F.size(F.array_intersect(F.col("shingles"), F.col("c_shingles")))
     scored = (
@@ -1533,7 +1548,17 @@ def incremental_dedup(
         )
     )
     scored = lineage_barrier(scored, checkpoint_dir, eager=False)
-    rep_hits = (
+    rep_hits = _jaccard_hits(scored, threshold)
+    member_hits = _member_hits(sk, rep_hits, checkpoint_dir)
+    pairs = _sketch_pairs(sk, threshold, checkpoint_dir)
+    return _batch_verdicts(batch, id_col, member_hits, pairs, checkpoint_dir)
+
+
+def _jaccard_hits(scored: DataFrame, threshold: float) -> DataFrame:
+    """``(b_id, corpus_match)`` — the minimum corpus id whose Jaccard with
+    each batch representative reaches ``threshold``, from verified
+    candidate rows ``(b_id, c_id, n_inter, n_total)``."""
+    return (
         scored.select(
             "b_id",
             "c_id",
@@ -1546,34 +1571,44 @@ def incremental_dedup(
         .groupBy("b_id")
         .agg(F.min("c_id").alias("corpus_match"))
     )
-    # representative hit → every member of its exact-content group is a dup
-    rep_ch = reps.select(F.col("doc_id").alias("b_id"), "chash")
-    member_hits = (
-        rep_hits.join(rep_ch, "b_id")
-        .join(members, "chash")
+
+
+def _member_hits(
+    sk: _Sketches, rep_hits: DataFrame, checkpoint_dir: str | None
+) -> DataFrame:
+    """Representative hit → every member of its exact-content group is a
+    corpus dup: ``(doc_id, corpus_match)``. Materialized once behind an
+    eager lineage barrier — the verdict tail reads it from four branches
+    (two pair anti-joins, the clean-id anti-join, the hit rows), and each
+    would otherwise re-plan and re-run the whole probe."""
+    hits = (
+        rep_hits.join(sk.base.select(F.col("doc_id").alias("b_id"), "chash"), "b_id")
+        .join(sk.members, "chash")
         .select("doc_id", "corpus_match")
     )
+    return lineage_barrier(hits, checkpoint_dir)
 
-    # batch-internal near-dups among corpus-clean docs: full batch pairs,
-    # then components over the clean subgraph (a pair into a corpus-dup doc
-    # is irrelevant — that doc is dropped anyway)
-    pairs = minhash_lsh_pairs(
-        batch,
-        id_col,
-        text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        threshold=threshold,
-        checkpoint_dir=checkpoint_dir,
-    )
-    dup_ids = member_hits.select(F.col("doc_id").alias("id_a"))
+
+def _batch_verdicts(
+    batch: DataFrame,
+    id_col: str,
+    corpus_hits: DataFrame,
+    pairs: DataFrame,
+    checkpoint_dir: str | None,
+) -> DataFrame:
+    """The verdict frame shared by the incremental routes: ``dup_corpus``
+    for every ``corpus_hits`` row ``(doc_id, corpus_match)``; the
+    corpus-clean rest resolves by connected components over the
+    batch-internal ``pairs`` among clean docs (a pair into a corpus-dup
+    doc is irrelevant — that doc is dropped anyway), minimum id surviving
+    as ``new`` and the others ``dup_batch``."""
+    dup_ids = corpus_hits.select(F.col("doc_id").alias("id_a"))
     clean_pairs = pairs.join(dup_ids, "id_a", "left_anti").join(
         dup_ids.withColumnRenamed("id_a", "id_b"), "id_b", "left_anti"
     )
     comp = assign_components(
         batch.select(F.col(id_col).alias("doc_id")).join(
-            member_hits.select("doc_id"), "doc_id", "left_anti"
+            corpus_hits.select("doc_id"), "doc_id", "left_anti"
         ),
         "doc_id",
         clean_pairs,
@@ -1588,7 +1623,7 @@ def incremental_dedup(
             "match_id"
         ),
     )
-    hits = member_hits.select(
+    hits = corpus_hits.select(
         "doc_id",
         F.lit("dup_corpus").alias("verdict"),
         F.col("corpus_match").alias("match_id"),
@@ -1811,10 +1846,15 @@ def incremental_minhash_ledger(
       a ~2⁻⁶⁰ collision). Only candidate doc ids are ever read from it.
 
     Per-ingest cost tracks the BATCH: batch docs collapse to exact-content
-    representatives, reps band-key against the bands table, survivors'
-    sketch rows append back. The standing corpus is never re-shingled —
-    its sketches were paid for once, at its own ingest. Register an
-    existing corpus by ingesting it once against fresh tables.
+    representatives, and ONE persisted sketch pass over them (shingles,
+    hashes, band keys) serves every later step — the band probe against
+    the bands table, the Jaccard verification, the batch-internal
+    near-dup pairs (stages 2–3 of :func:`minhash_lsh_pairs` over those
+    sketches; the raw batch text is never tokenized twice) and the
+    survivors' append. The standing corpus is never re-shingled — its
+    sketches were paid for once, at its own ingest. Register an existing
+    corpus by ingesting it once against fresh tables. NULL text sketches
+    as the empty document.
 
     Verdict frame matches :func:`incremental_dedup`: one row per batch doc,
     ``(doc_id, verdict ∈ {new, dup_corpus, dup_batch}, match_id)``, corpus
@@ -1826,26 +1866,26 @@ def incremental_minhash_ledger(
     verdicts would recompute against the grown ledger and flip their own
     ``new`` rows to ``dup_corpus`` (same hazard as the exact ledger).
     Replaying an ingest is then idempotent: every doc reports dup_corpus.
+
+    Caches: with ``update_ledger`` the batch sketch caches are released
+    before returning (the verdicts are already materialized). Without it
+    the returned plan still reads them, so they stay registered for
+    :func:`~datacompy_spark.plans.cache.release_caches`.
     """
     maybe_bcast = F.broadcast if broadcast_batch else (lambda df: df)
     bands_table = f"{ledger_prefix}_bands"
     shingles_table = f"{ledger_prefix}_shingles"
 
-    # batch side: exact-content collapse first (hot-bucket guard), then one
-    # persisted sketch pass over the representatives — it feeds candidate
-    # generation, verification, and the ledger append
-    members, reps = collapse_exact_content(batch, id_col, text_col)
-    rep_docs = reps.select(
-        F.col("doc_id").alias(id_col),
-        F.concat_ws(" ", "toks").alias(text_col),
-    )
-    bbase = _shingle_base(rep_docs, id_col, text_col, shingle_k).persist()
-    bbase.count()
-    bband = _band_key_rows(bbase, num_hashes, bands)
+    # batch side: ONE sketch pass over the exact-content representatives
+    # (hot-bucket guard) — it feeds candidate generation, verification,
+    # the batch-internal pairs and the ledger append
+    sk = _sketch(batch, id_col, text_col, num_hashes, bands, shingle_k)
 
     if spark.catalog.tableExists(bands_table):
         cand = (
-            maybe_bcast(bband.select(F.col("doc_id").alias("b_id"), "band", "bkey"))
+            maybe_bcast(
+                sk.banded.select(F.col("doc_id").alias("b_id"), "band", "bkey")
+            )
             .join(
                 spark.table(bands_table).select(
                     F.col("doc_id").alias("c_id"), "band", "bkey"
@@ -1864,9 +1904,9 @@ def incremental_minhash_ledger(
             "doc_id",
             "left_semi",
         ).select(F.col("doc_id").alias("c_id"), F.col("shash").alias("c_shash"))
-        sh_b = bbase.select(F.col("doc_id").alias("b_id"), "shash")
+        sh_b = sk.base.select(F.col("doc_id").alias("b_id"), "shash")
         inter = F.size(F.array_intersect(F.col("shash"), F.col("c_shash")))
-        rep_hits = (
+        scored = (
             cand.join(maybe_bcast(sh_b), "b_id")
             .join(sh_c, "c_id")
             .select(
@@ -1875,23 +1915,9 @@ def incremental_minhash_ledger(
                 inter.alias("n_inter"),
                 (F.size("shash") + F.size("c_shash")).alias("n_total"),
             )
-            .select(
-                "b_id",
-                "c_id",
-                (
-                    F.col("n_inter").cast("double")
-                    / (F.col("n_total") - F.col("n_inter")).cast("double")
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= F.lit(threshold))
-            .groupBy("b_id")
-            .agg(F.min("c_id").alias("corpus_match"))
         )
-        rep_ch = reps.select(F.col("doc_id").alias("b_id"), "chash")
-        member_hits = (
-            rep_hits.join(rep_ch, "b_id")
-            .join(members, "chash")
-            .select("doc_id", "corpus_match")
+        member_hits = _member_hits(
+            sk, _jaccard_hits(scored, threshold), checkpoint_dir
         )
     else:
         # bootstrap frame typed from the batch id column — see the exact
@@ -1907,69 +1933,37 @@ def incremental_minhash_ledger(
             ),
         )
 
-    # batch-internal near-dups among corpus-clean docs (same subgraph rule
-    # as incremental_dedup: a pair into a corpus-dup doc is irrelevant)
-    pairs = minhash_lsh_pairs(
-        batch,
-        id_col,
-        text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-        threshold=threshold,
-        checkpoint_dir=checkpoint_dir,
-    )
-    dup_ids = member_hits.select(F.col("doc_id").alias("id_a"))
-    clean_pairs = pairs.join(dup_ids, "id_a", "left_anti").join(
-        dup_ids.withColumnRenamed("id_a", "id_b"), "id_b", "left_anti"
-    )
-    comp = assign_components(
-        batch.select(F.col(id_col).alias("doc_id")).join(
-            member_hits.select("doc_id"), "doc_id", "left_anti"
-        ),
-        "doc_id",
-        clean_pairs,
-        checkpoint_dir=checkpoint_dir,
-    )
-    clean = comp.select(
-        "doc_id",
-        F.when(F.col("doc_id") != F.col("component"), F.lit("dup_batch"))
-        .otherwise(F.lit("new"))
-        .alias("verdict"),
-        F.when(F.col("doc_id") != F.col("component"), F.col("component")).alias(
-            "match_id"
-        ),
-    )
-    hits = member_hits.select(
-        "doc_id",
-        F.lit("dup_corpus").alias("verdict"),
-        F.col("corpus_match").alias("match_id"),
-    )
-    out = hits.unionByName(clean)
+    pairs = _sketch_pairs(sk, threshold, checkpoint_dir)
+    out = _batch_verdicts(batch, id_col, member_hits, pairs, checkpoint_dir)
     if not update_ledger:
         return out
 
-    # verdicts fixed BEFORE either append (see docstring); survivors are
-    # always exact-content representatives, so their band and sketch rows
-    # come straight from the cached batch sketch pass
-    out = lineage_barrier(out, None, eager=True)
-    new_ids = out.filter(F.col("verdict") == "new").select("doc_id")
-    (
-        bband.join(F.broadcast(new_ids), "doc_id")
-        .select("bkey", "band", "doc_id")
-        .write.mode("append")
-        .bucketBy(num_buckets, "bkey")
-        .sortBy("bkey")
-        .saveAsTable(bands_table)
-    )
-    (
-        bbase.join(F.broadcast(new_ids), "doc_id")
-        .select("doc_id", "shash")
-        .write.mode("append")
-        .bucketBy(num_buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(shingles_table)
-    )
+    try:
+        # verdicts fixed BEFORE either append (see docstring); survivors
+        # are always exact-content representatives, so their band and
+        # sketch rows come straight from the cached batch sketch pass
+        out = lineage_barrier(out, None, eager=True)
+        new_ids = out.filter(F.col("verdict") == "new").select("doc_id")
+        (
+            sk.banded.join(F.broadcast(new_ids), "doc_id")
+            .select("bkey", "band", "doc_id")
+            .write.mode("append")
+            .bucketBy(num_buckets, "bkey")
+            .sortBy("bkey")
+            .saveAsTable(bands_table)
+        )
+        (
+            sk.base.join(F.broadcast(new_ids), "doc_id")
+            .select("doc_id", "shash")
+            .write.mode("append")
+            .bucketBy(num_buckets, "doc_id")
+            .sortBy("doc_id")
+            .saveAsTable(shingles_table)
+        )
+    finally:
+        # the returned verdicts sit behind the barrier, so once the appends
+        # ran (or failed) nothing reads the sketch caches again
+        release(*sk.caches)
     return out
 
 

@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame
 
 _TRACKED: List[DataFrame] = []
 
-#: guards _CHECKPOINT_SEQ and _TRACKED_CHECKPOINTS: the docstrings advertise
-#: multi-consumer borrowed sessions, where concurrent register calls could
+#: guards _TRACKED, _CHECKPOINT_SEQ and _TRACKED_CHECKPOINTS: the docstrings
+#: advertise multi-consumer borrowed sessions, where concurrent register calls could
 #: otherwise interleave seq increment and append and hand two checkpoints
 #: the same seq — making one caller's [lo, hi) span release a neighbor's
 #: blocks, the exact hazard the span API exists to prevent (r12 review).
@@ -72,8 +72,20 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     action populates the cache, exactly as with a bare ``persist()``.
     """
     df = df.persist()
-    _TRACKED.append(df)
+    with _LEDGER_LOCK:
+        _TRACKED.append(df)
     return df
+
+
+def release(*frames: DataFrame) -> None:
+    """Unpersist ``frames`` now and drop them from the ledger — for an
+    operator that knows its own tracked caches are idle before it returns
+    (its result is already materialized), so they need not wait for
+    :func:`release_caches`."""
+    for df in frames:
+        df.unpersist()
+    with _LEDGER_LOCK:
+        _TRACKED[:] = [d for d in _TRACKED if not any(d is f for f in frames)]
 
 
 def register_checkpoint(df: DataFrame) -> DataFrame:

@@ -324,12 +324,25 @@ def build_report_data(
             has_rows=True, rows=_df_to_str(df.select(*shown), n, join_cols)
         )
 
+    # Spark's job group, description and scheduler pool are thread-local:
+    # wrap each task so the pool's jobs inherit the caller's (captured
+    # here, at wrap time). Without pinned threads it returns the session
+    # itself, and there are no per-thread properties to carry.
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(cmp.spark)
+    if not callable(inherit):
+        inherit = lambda f: f  # noqa: E731
     samples: List[str] = []
     with ThreadPoolExecutor(max_workers=min(8, len(sample_cols) + 2)) as pool:
-        f_u1 = pool.submit(pull_unique, cmp.df1_unq_rows, cmp.df1_unq_rows_count)
-        f_u2 = pool.submit(pull_unique, cmp.df2_unq_rows, cmp.df2_unq_rows_count)
+        f_u1 = pool.submit(
+            inherit(pull_unique), cmp.df1_unq_rows, cmp.df1_unq_rows_count
+        )
+        f_u2 = pool.submit(
+            inherit(pull_unique), cmp.df2_unq_rows, cmp.df2_unq_rows_count
+        )
         if sample_cols:
-            samples = list(pool.map(pull, sample_cols))
+            samples = list(pool.map(inherit(pull), sample_cols))
         df1_unique_rows = f_u1.result()
         df2_unique_rows = f_u2.result()
     if stat_list:

@@ -7,10 +7,15 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    # a per-session warehouse: catalog tables the tests create must not
+    # collide with directories an earlier (e.g. killed) run left under
+    # the CWD's spark-warehouse/, which the in-memory catalog forgets
+    warehouse = tmp_path_factory.mktemp("spark-warehouse")
     s = (
         SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.warehouse.dir", str(warehouse))
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -10,6 +10,15 @@ import pytest
 from datacompy_spark.cli import main
 
 
+def _cli_json(capsys, rc, *ok):
+    """The JSON summary a CLI run printed, parsed only after its exit code
+    is checked (``ok`` defaults to 0): a run that fails prints its error to
+    stderr and nothing to stdout, so the message carries that stderr."""
+    cap = capsys.readouterr()
+    assert rc in (ok or (0,)), f"exit code {rc}; stderr:\n{cap.err}"
+    return json.loads(cap.out)
+
+
 @pytest.fixture(scope="module")
 def pair(tmp_path_factory, spark):
     d = tmp_path_factory.mktemp("cli")
@@ -170,7 +179,7 @@ class TestOutputs:
     def test_json_format(self, pair, capsys):
         rc = main(["compare", "--left", pair[0], "--right", pair[1], "--on", "id",
                    "--format", "json"])
-        data = json.loads(capsys.readouterr().out)
+        data = _cli_json(capsys, rc, 1)
         assert data["row_summary"]["common_rows"] == 2
         assert rc == 1
 
@@ -315,11 +324,7 @@ class TestProfileCommand:
         p = str(tmp_path / "t.parquet")
         df.write.parquet(p)
         rc = main(["profile", "--input", p, "--format", "json"])
-        out = capsys.readouterr().out
-        assert rc == 0
-        import json as _json
-
-        rows = {r["col_name"]: r for r in _json.loads(out)}
+        rows = {r["col_name"]: r for r in _cli_json(capsys, rc)}
         assert rows["v"]["n_nulls"] == 1 and rows["id"]["n_rows"] == 2
 
     def test_profile_drift_exit_codes(self, tmp_path, capsys, spark):
@@ -346,9 +351,7 @@ class TestProfileCommand:
         ).write.parquet(b)
         rc = main(["profile", "--input", a, "--compare-to", b, "--ks",
                    "--format", "json"])
-        import json as _json
-
-        rows = {r["col_name"]: r for r in _json.loads(capsys.readouterr().out)}
+        rows = {r["col_name"]: r for r in _cli_json(capsys, rc, 0, 1)}
         assert rc in (0, 1)
         # x shifted +5 over a 0-9 support: half the mass moves past 4.x
         assert rows["x"]["ks_stat"] == pytest.approx(0.5)
@@ -382,9 +385,7 @@ class TestProfileCommand:
         p = str(tmp_path / "c.parquet")
         spark.createDataFrame([(i, str(i % 3)) for i in range(30)], "id bigint, v string").write.parquet(p)
         rc = main(["profile", "--input", p, "--columns", "v", "--exact-distinct", "--format", "json"])
-        import json as _json
-
-        rows = _json.loads(capsys.readouterr().out)
+        rows = _cli_json(capsys, rc)
         assert rc == 0 and len(rows) == 1
         assert rows[0]["col_name"] == "v" and rows[0]["n_distinct"] == 3
 
@@ -400,9 +401,7 @@ class TestDedupCommand:
         spark.createDataFrame(rows, "doc_id bigint, text string").write.parquet(p)
         out = str(tmp_path / "verdict.parquet")
         rc = main(["dedup", "--input", p, "--method", "exact", "--verdict", out])
-        import json as _json
-
-        summary = _json.loads(capsys.readouterr().out)
+        summary = _cli_json(capsys, rc)
         assert rc == 0
         assert summary["n_docs"] == 3 and summary["n_survivors"] == 2
         v = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
@@ -419,9 +418,7 @@ class TestDedupCommand:
         spark.createDataFrame(rows, "doc_id bigint, text string").write.parquet(p)
         out = str(tmp_path / "clean.parquet")
         rc = main(["dedup", "--input", p, "--method", "spans", "--verdict", out])
-        import json as _json
-
-        summary = _json.loads(capsys.readouterr().out)
+        summary = _cli_json(capsys, rc)
         assert rc == 0
         assert summary["method"] == "spans"
         assert summary["n_tokens"] == 17 and summary["n_tokens_removed"] == 5
@@ -437,9 +434,7 @@ class TestDedupCommand:
         spark.createDataFrame(rows, "doc_id bigint, text string").write.parquet(p)
         out = str(tmp_path / "clean.parquet")
         rc = main(["dedup", "--input", p, "--method", "lines", "--verdict", out])
-        import json as _json
-
-        summary = _json.loads(capsys.readouterr().out)
+        summary = _cli_json(capsys, rc)
         assert rc == 0
         assert summary["n_lines"] == 4 and summary["n_lines_removed"] == 1
         got = {r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()}
@@ -550,9 +545,7 @@ class TestDedupCommand:
             "--id-col", "vec_id", "--min-cosine", "0.999",
             "--verdict", out, "--export-pairs", pairs,
         ])
-        import json as _json
-
-        summary = _json.loads(capsys.readouterr().out)
+        summary = _cli_json(capsys, rc)
         assert rc == 0
         assert summary["n_docs"] == 3 and summary["n_survivors"] == 2
         got_pairs = {(r["id_a"], r["id_b"]) for r in spark.read.parquet(pairs).collect()}
@@ -600,9 +593,7 @@ class TestDedupCommand:
             "dedup", "--input", batch_p, "--against", corpus_p,
             "--method", "exact", "--verdict", out,
         ])
-        import json as _json
-
-        summary = _json.loads(capsys.readouterr().out)
+        summary = _cli_json(capsys, rc)
         assert rc == 0 and summary["mode"] == "incremental"
         assert summary["n_batch"] == 3 and summary["n_new"] == 1
         assert summary["n_dup_corpus"] == 1 and summary["n_dup_batch"] == 1
@@ -625,19 +616,17 @@ class TestDedupCommand:
                 [(10, "Ledger DOC one!"), (11, "a third doc")],
                 "doc_id bigint, text string",
             ).write.parquet(b2)
-            import json as _json
-
             out1 = str(tmp_path / "v1.parquet")
             rc = main(["dedup", "--input", b1, "--ledger", "cli_ledger_t",
                        "--method", "exact", "--verdict", out1])
-            s1 = _json.loads(capsys.readouterr().out)
+            s1 = _cli_json(capsys, rc)
             assert rc == 0 and s1["mode"] == "incremental-ledger"
             assert s1["n_new"] == 2
 
             out2 = str(tmp_path / "v2.parquet")
             rc = main(["dedup", "--input", b2, "--ledger", "cli_ledger_t",
                        "--method", "exact", "--verdict", out2])
-            s2 = _json.loads(capsys.readouterr().out)
+            s2 = _cli_json(capsys, rc)
             assert rc == 0 and s2["n_dup_corpus"] == 1 and s2["n_new"] == 1
             v = {r["doc_id"]: (r["verdict"], r["match_id"])
                  for r in spark.read.parquet(out2).collect()}
@@ -660,17 +649,15 @@ class TestDedupCommand:
                 [(10, near + " today"), (11, "fresh text on shuffle partitions")],
                 "doc_id bigint, text string",
             ).write.parquet(b2)
-            import json as _json
-
             rc = main(["dedup", "--input", b1, "--ledger", "cli_mhl",
                        "--method", "minhash", "--verdict", str(tmp_path / "v1.parquet")])
-            s1 = _json.loads(capsys.readouterr().out)
+            s1 = _cli_json(capsys, rc)
             assert rc == 0 and s1["n_new"] == 2
 
             out2 = str(tmp_path / "v2.parquet")
             rc = main(["dedup", "--input", b2, "--ledger", "cli_mhl",
                        "--method", "minhash", "--verdict", out2])
-            s2 = _json.loads(capsys.readouterr().out)
+            s2 = _cli_json(capsys, rc)
             assert rc == 0 and s2["n_dup_corpus"] == 1 and s2["n_new"] == 1
             v = {r["doc_id"]: (r["verdict"], r["match_id"])
                  for r in spark.read.parquet(out2).collect()}
@@ -702,8 +689,6 @@ class TestDedupCommand:
 
 class TestProfileQuantiles:
     def test_quantiles_json(self, tmp_path, capsys, spark):
-        import json as _json
-
         p = str(tmp_path / "t.parquet")
         spark.createDataFrame(
             [(float(i), "x") for i in range(1, 101)], "v double, s string"
@@ -712,7 +697,7 @@ class TestProfileQuantiles:
             "profile", "--input", p, "--quantiles", "0.5", "--format", "json",
         ])
         assert rc == 0
-        rows = _json.loads(capsys.readouterr().out)
+        rows = _cli_json(capsys, rc)
         # string column skipped automatically; exact interpolated median
         assert rows == [{"col_name": "v", "prob": 0.5, "quantile": 50.5}]
 
@@ -728,13 +713,11 @@ class TestProfileQuantiles:
 
 class TestProfileFiles:
     def test_files_layout_json(self, tmp_path, capsys, spark, sf_dir):
-        import json as _json
-
         rc = main([
             "profile", "--input", f"{sf_dir}/lineitem.parquet",
             "--files", "--format", "json",
         ])
-        out = _json.loads(capsys.readouterr().out)
+        out = _cli_json(capsys, rc)
         assert rc == 0 and len(out) == 1
         row = out[0]
         assert row["n_files"] == 1 and row["total_bytes"] > 0
@@ -752,15 +735,13 @@ class TestProfileFiles:
 
 class TestCompactCommand:
     def test_compacts_and_reports(self, tmp_path, capsys, spark):
-        import json as _json
-
         src = str(tmp_path / "frag")
         dst = str(tmp_path / "out")
         spark.range(0, 5_000).selectExpr(
             "id", "repeat('z', 64) AS pad"
         ).repartition(20).write.parquet(src)
         rc = main(["compact", "--input", src, "--output", dst, "--target-mb", "1"])
-        s = _json.loads(capsys.readouterr().out)
+        s = _cli_json(capsys, rc)
         assert rc == 0
         assert s["files_before"] == 20
         assert s["files_written"] == s["files_planned"] >= 1
@@ -791,26 +772,22 @@ class TestAnomalyCommand:
         return p
 
     def test_gate_flags_spike(self, feed, capsys):
-        import json as _json
-
         rc = main([
             "anomaly", "--input", feed, "--by", "event_type",
             "--threshold", "3", "--fail-on-anomaly",
         ])
-        out = _json.loads(capsys.readouterr().out)
+        out = _cli_json(capsys, rc, 1)
         assert rc == 1
         assert out["n_anomalies"] == 1
         assert out["max_abs_zscore"] == pytest.approx(10.0)
 
     def test_gate_passes_under_higher_threshold(self, feed, capsys, tmp_path):
-        import json as _json
-
         exp = str(tmp_path / "scores.parquet")
         rc = main([
             "anomaly", "--input", feed, "--by", "event_type",
             "--threshold", "11", "--fail-on-anomaly", "--export", exp,
         ])
-        out = _json.loads(capsys.readouterr().out)
+        out = _cli_json(capsys, rc)
         assert rc == 0 and out["n_anomalies"] == 0
         import os
 
@@ -840,15 +817,13 @@ class TestAnomalyCommand:
         return p
 
     def test_drift_gate_flags_distribution_jump(self, drifting_feed, capsys):
-        import json as _json
-
         rc = main([
             "anomaly", "--input", drifting_feed, "--by", "event_type",
             "--bucket-seconds", "86400", "--drift-col", "value",
             "--drift-lo", "0", "--drift-hi", "100", "--max-psi", "0.2",
             "--fail-on-anomaly", "--threshold", "100",
         ])
-        out = _json.loads(capsys.readouterr().out)
+        out = _cli_json(capsys, rc, 1)
         # volume is flat (threshold 100 never fires); the DISTRIBUTION gate
         # alone must flip the exit code on day 3
         assert rc == 1
@@ -887,9 +862,7 @@ class TestProfileVecHealth:
         rc = main(["profile", "--input", p, "--vec-col", "embedding",
                    "--dim", "4", "--vec-export", out, "--fail-on-bad"])
         assert rc == 1  # three bad rows -> CI gate trips
-        import json as _json
-
-        summary = _json.loads(capsys.readouterr().out.strip())
+        summary = _cli_json(capsys, rc, 1)
         assert summary["n_rows"] == 4 and summary["n_bad"] == 3
         assert summary["verdicts"] == {
             "bad_dim": 1, "missing": 1, "norm_outlier": 1, "ok": 1,
@@ -930,7 +903,7 @@ class TestCheckCommand:
         )
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--rules", rules, "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
+        s = _cli_json(capsys, rc)
         assert rc == 0
         assert s["n_rules"] == 1 and s["n_failed"] == 0 and s["total_rows"] == 3
 
@@ -943,7 +916,7 @@ class TestCheckCommand:
         out = str(tmp_path / "verdicts")
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--rules", rules, "--fail-on-violation", "--export", out])
-        s = json.loads(capsys.readouterr().out)
+        s = _cli_json(capsys, rc, 1)
         assert rc == 1
         assert s["n_failed"] == 3
         assert s["failures"]["unique(id)"] == 1
@@ -954,7 +927,7 @@ class TestCheckCommand:
         rules = self._rules_file(tmp_path, [{"rule": "not_null", "col": "s"}])
         rc = main(["check", "--input", dataset, "--input-format", "parquet", "--rules", rules])
         assert rc == 0
-        assert json.loads(capsys.readouterr().out)["n_failed"] == 1
+        assert _cli_json(capsys, rc)["n_failed"] == 1
 
     def test_fk_rule_pass_and_fail(self, tmp_path, capsys, dataset, spark):
         parent_ok = str(tmp_path / "parent_ok")
@@ -966,12 +939,12 @@ class TestCheckCommand:
         # contained: child ids {1,2} ⊆ {1,2,3} → pass
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--fk", f"id={parent_ok}:pk", "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
+        s = _cli_json(capsys, rc)
         assert rc == 0 and s["n_rules"] == 1 and s["n_failed"] == 0
         # id=2 missing from parent_bad → violation, gate fires
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--fk", f"id={parent_bad}:pk", "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
+        s = _cli_json(capsys, rc, 1)
         assert rc == 1 and s["n_failed"] == 1
         assert list(s["failures"].values()) == [1]
 
@@ -984,7 +957,7 @@ class TestCheckCommand:
         rc = main(["check", "--input", dataset, "--input-format", "parquet",
                    "--rules", rules, "--fk", f"id={parent_bad}:pk",
                    "--fk-min-containment", "0.5", "--fail-on-violation"])
-        s = json.loads(capsys.readouterr().out)
+        s = _cli_json(capsys, rc)
         # containment 1/2 = 0.5 >= 0.5: passes even with 1 unresolved key
         assert rc == 0 and s["n_rules"] == 2 and s["n_failed"] == 0
 
@@ -1009,8 +982,6 @@ class TestCheckCommand:
 
 class TestProfileMadOutliers:
     def test_mad_by_group_json(self, tmp_path, capsys, spark):
-        import json as _json
-
         p = str(tmp_path / "m.parquet")
         rows = (
             [("a", float(v)) for v in (10, 11, 12, 13, 14, 1000)]
@@ -1022,14 +993,12 @@ class TestProfileMadOutliers:
             "--format", "json",
         ])
         assert rc == 0
-        out = {r["g"]: r for r in _json.loads(capsys.readouterr().out)}
+        out = {r["g"]: r for r in _cli_json(capsys, rc)}
         assert out["a"]["n_outliers"] == 1      # the 1000 in the tight group
         assert out["b"]["n_outliers"] == 0      # in-scale for the wide group
         assert out["a"]["median"] == 12.5
 
     def test_mad_whole_table_and_validation(self, tmp_path, capsys, spark):
-        import json as _json
-
         p = str(tmp_path / "m2.parquet")
         spark.createDataFrame(
             [(float(v), "x") for v in (1, 2, 3, 4, 100)], "v double, s string"
@@ -1037,7 +1006,7 @@ class TestProfileMadOutliers:
         rc = main(["profile", "--input", p, "--mad-outliers", "v",
                    "--format", "json"])
         assert rc == 0
-        rows = _json.loads(capsys.readouterr().out)
+        rows = _cli_json(capsys, rc)
         assert len(rows) == 1 and rows[0]["n"] == 5 and rows[0]["n_outliers"] == 1
         assert "g" not in rows[0]  # whole-table mode leaks no group column
         capsys.readouterr()
@@ -1066,8 +1035,6 @@ class TestProfileKAnonymity:
         return p
 
     def test_violations_and_gate(self, tmp_path, capsys, spark):
-        import json as _json
-
         p = self._table(spark, tmp_path)
         rc = main([
             "profile", "--input", p, "--k-anonymity", "country,tier",
@@ -1075,7 +1042,7 @@ class TestProfileKAnonymity:
             "--format", "json",
         ])
         assert rc == 0  # violations print but don't gate without the flag
-        out = {(r["country"], r["tier"]): r for r in _json.loads(capsys.readouterr().out)}
+        out = {(r["country"], r["tier"]): r for r in _cli_json(capsys, rc)}
         assert set(out) == {("US", "b"), ("CA", "a")}
         assert out[("US", "b")]["k_violation"] is True
         assert out[("CA", "a")]["k_violation"] is False

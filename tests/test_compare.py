@@ -249,6 +249,55 @@ class TestReport:
         c.report(html_file=str(out))
         assert out.read_text().startswith("<html><head>")
 
+    def test_report_sample_jobs_keep_callers_job_group(self, spark, f2):
+        """The report's sampling pool runs its jobs on worker threads; they
+        must carry the caller's job group (so cancelJobGroup reaches them
+        and per-group accounting sees them), not land ungrouped."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        c = SparkCompare(spark, *f2, join_columns="id")
+        c._ensure_cached()  # the sample jobs below are the report's rest
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("report-sampling-test", "report sampling")
+        try:
+            data = c.build_report_data()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        # mismatch samples and both unique-row tables were pulled
+        assert data.mismatch_stats.has_samples
+        assert data.df1_unique_rows.has_rows and data.df2_unique_rows.has_rows
+        assert tracker.getJobIdsForGroup("report-sampling-test")
+        assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+    def test_failed_cache_populate_is_retryable(self, spark, f2, monkeypatch):
+        """If the exceptions-cache count fails, the compare must not keep a
+        persisted, unpopulated cache memoized without statistics: the
+        frame is unpersisted, the binding dropped, and a retry succeeds."""
+        c = SparkCompare(spark, *f2, join_columns="id")
+        frame_cls = type(c._outer)
+        real_count = frame_cls.count
+        failed = []
+
+        def count_fails_once(self):
+            if not failed:
+                failed.append(self)
+                raise RuntimeError("injected count failure")
+            return real_count(self)
+
+        monkeypatch.setattr(frame_cls, "count", count_fails_once)
+        with pytest.raises(RuntimeError, match="injected"):
+            c._ensure_cached()
+        assert "_exceptions" not in c.__dict__
+        assert "_stats" not in c.__dict__
+        assert not failed[0].is_cached
+        c._ensure_cached()
+        assert c._exceptions.is_cached
+        assert c.intersect_rows_count == 2
+        assert c.build_report_data().to_dict()["row_summary"]["common_rows"] == 2
+        c._exceptions.unpersist()
+
 
 class TestTestdata:
     def test_lineitem_self_compare(self, spark, lineitem):

@@ -271,6 +271,36 @@ def test_bench_history_cutoff_excludes_pre_r8_rounds(tmp_path):
     assert bench._HISTORY_MIN_ROUND == 8
 
 
+def test_bench_history_skips_other_core_legs(tmp_path):
+    """An other-core leg of a round (``BENCH_r15_c8.json``) matches the
+    history glob next to the 32-core record. The record's own ``cpus``
+    field, not its file name, must keep it out of every scan of a run on
+    another core count; a record without ``cpus`` stays eligible."""
+    import json as _json
+
+    import bench
+
+    leg32 = {"n": 15, "rc": 0, "cpus": 32, "sf": 0.1,
+             "parsed": {"queries": {"qx": 3.0}, "noise": [0.2]}}
+    leg8 = {"n": 15, "rc": 0, "cpus": 8, "sf": 0.1,
+            "parsed": {"queries": {"qx": 9.0, "qy": 1.0}, "noise": [0.1]}}
+    bare = {"sf": 0.1, "queries": {"qx": 5.0}, "noise": [0.3]}
+    (tmp_path / "BENCH_r15.json").write_text(_json.dumps(leg32))
+    (tmp_path / "BENCH_r15_c8.json").write_text(_json.dumps(leg8))
+    # a 32-core leg under a name the round regex does not parse
+    (tmp_path / "BENCH_r16_c32.json").write_text(_json.dumps(bare))
+    here = str(tmp_path)
+    assert [d.get("cpus") for d in bench._history(here, "32")] == [32, None]
+    assert bench._trailing_values(0.1, here=here, cpus="32") == {"qx": [3.0, 5.0]}
+    assert bench._healthy_sentinel_floor(here=here, cpus="32") == pytest.approx(0.2)
+    # the 8-core run reads its own leg
+    assert bench._trailing_values(0.1, here=here, cpus="8") == {
+        "qx": [9.0, 5.0], "qy": [1.0]
+    }
+    # no core count given: every record, as before
+    assert len(bench._history(here)) == 3
+
+
 def test_bench_gate_instruments_in_record():
     """r13 verdict items 2+4: the one-line driver record must carry (a)
     gates_norm — the sentinel-normalized twin of every gate timing, (b)

@@ -45,6 +45,44 @@ class TestMinHash:
         sig = D.minhash_signatures(docs, "doc_id", "text", num_hashes=16).collect()
         assert all(len(r["signature"]) == 16 for r in sig)
 
+    def test_sketch_pairs_match_minhash_lsh_pairs(self, spark, documents):
+        """The shared stage 2–3 helper over one persisted sketch pass (what
+        the incremental routes and the ledger call) returns exactly the
+        pairs of minhash_lsh_pairs, also on a batch holding exact copies,
+        and every pair's Jaccard matches a pure-Python shingle-set
+        reference."""
+        import re
+
+        from datacompy_spark.plans.cache import release
+
+        def shingles(text, k=3):
+            norm = re.sub(" +", " ", re.sub("[^a-z0-9 ]", " ", text.lower())).strip()
+            toks = norm.split(" ")
+            if len(toks) < k:
+                return {" ".join(toks)}
+            return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+        docs = documents.select("doc_id", "text").limit(200)
+        copies = docs.limit(15).select(
+            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+        )
+        kw = dict(num_hashes=16, bands=4, shingle_k=3)
+        for batch in (docs, docs.unionByName(copies)):
+            want = sorted(
+                map(tuple, D.minhash_lsh_pairs(batch, "doc_id", "text", **kw).collect())
+            )
+            sk = D._sketch(batch, "doc_id", "text", **kw)
+            got = sorted(map(tuple, D._sketch_pairs(sk, 0.5, None).collect()))
+            release(*sk.caches)
+            assert got == want and got
+            text = {r["doc_id"]: r["text"] for r in batch.collect()}
+            for a, b, jac in got:
+                sa, sb = shingles(text[a]), shingles(text[b])
+                assert jac == len(sa & sb) / len(sa | sb) >= 0.5, (a, b)
+        # every copy pairs with its original at Jaccard 1.0
+        copy_ids = {r["doc_id"] for r in copies.collect()}
+        assert {(i - 1_000_000, i, 1.0) for i in copy_ids} <= set(got)
+
 
 class TestSimHash:
     def test_identical_and_near(self, spark, docs):
@@ -1496,6 +1534,93 @@ class TestIncrementalMinhashLedger:
             assert spark.table("mh_ledger_ro_bands").count() == n_bands
         finally:
             for t in ("mh_ledger_ro_bands", "mh_ledger_ro_shingles"):
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def test_null_and_empty_text_verdicts(self, spark):
+        """NULL, empty and punctuation-only text form one exact-content
+        group whose ledger sketch is the empty document's: whichever of
+        them a later batch brings, it is a corpus dup of the group's
+        survivor. Verdicts pinned from the release before the batch
+        sketch pass was shared."""
+        tables = ("mh_ledger_nul_bands", "mh_ledger_nul_shingles")
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        batches = [
+            [(1, None), (2, ""), (3, "!!! ???"),
+             (4, "the quick brown fox jumps over the lazy dog"), (5, "   ")],
+            [(10, None), (11, ""),
+             (12, "The quick brown fox jumps over the lazy dog again"),
+             (13, "fresh words never seen before here")],
+            [(20, ""), (21, None), (22, "fresh words never seen before here today")],
+        ]
+        want = [
+            {1: ("new", None), 2: ("dup_batch", 1), 3: ("dup_batch", 1),
+             4: ("new", None), 5: ("dup_batch", 1)},
+            {10: ("dup_corpus", 1), 11: ("dup_corpus", 1),
+             12: ("dup_corpus", 4), 13: ("new", None)},
+            {20: ("dup_corpus", 1), 21: ("dup_corpus", 1), 22: ("dup_corpus", 13)},
+        ]
+        try:
+            for rows, expect in zip(batches, want):
+                b = spark.createDataFrame(rows, "doc_id bigint, text string")
+                got = {
+                    r["doc_id"]: (r["verdict"], r["match_id"])
+                    for r in D.incremental_minhash_ledger(
+                        spark, b, "mh_ledger_nul", "doc_id", "text", num_buckets=4
+                    ).collect()
+                }
+                assert got == expect
+            sketches = {
+                r["doc_id"]: r["shash"]
+                for r in spark.table("mh_ledger_nul_shingles").collect()
+            }
+            assert set(sketches) == {1, 4, 13} and len(sketches[1]) == 1
+        finally:
+            for t in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def test_ingests_leave_no_persisted_frames(self, spark):
+        """Repeated ingests in one session must not accumulate cached
+        frames: the updating path releases its sketch caches before it
+        returns, and a read-only ingest's caches are freed by
+        release_caches(). The checkpointed verdict frames are the caller's
+        and are released through their ledger mark."""
+        from datacompy_spark.plans.cache import (
+            checkpoint_ledger_mark,
+            release_caches,
+            release_checkpoints,
+        )
+
+        tables = ("mh_ledger_leak_bands", "mh_ledger_leak_shingles")
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        jsc = spark.sparkContext._jsc
+
+        def persisted():
+            return set(jsc.getPersistentRDDs().keySet())
+
+        before = persisted()
+        try:
+            for i in range(4):
+                b = spark.createDataFrame(
+                    [
+                        (10 * i + 1, f"ingest {i} talks about shuffle partitions"),
+                        (10 * i + 2, f"ingest {i} talks about shuffle partitions"),
+                        (10 * i + 3, "a document every ingest repeats verbatim"),
+                    ],
+                    "doc_id bigint, text string",
+                )
+                mark = checkpoint_ledger_mark()
+                D.incremental_minhash_ledger(
+                    spark, b, "mh_ledger_leak", "doc_id", "text", num_buckets=4,
+                    update_ledger=i < 3,
+                ).collect()
+                if i == 3:
+                    release_caches()
+                release_checkpoints(mark)
+                assert persisted() - before == set(), i
+        finally:
+            for t in tables:
                 spark.sql(f"DROP TABLE IF EXISTS {t}")
 
     def test_read_only_probe(self, spark):
