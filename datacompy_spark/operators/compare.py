@@ -110,17 +110,6 @@ class ColumnStat(TypedDict):
 Tolerance = Union[int, float, Mapping[str, float]]
 
 
-def _ordered_unique(items: Sequence[str]) -> List[str]:
-    """Insertion-ordered dedup (ref uses OrderedSet, ``spark.py:365-375``)."""
-    seen = set()
-    out = []
-    for it in items:
-        if it not in seen:
-            seen.add(it)
-            out.append(it)
-    return out
-
-
 def normalize_tolerance(tol: Tolerance, columns: Sequence[str], lower: bool) -> Dict[str, float]:
     """Resolve a scalar-or-dict tolerance spec to per-column floats.
 
@@ -776,13 +765,23 @@ class SparkCompare:
             )
             if self._maxdiff_capable(c):
                 d1, d2 = c1.try_cast("double"), c2.try_cast("double")
-                diff = F.abs(d1 - d2)
                 # exclude NaN rows from max_diff (ref ``spark.py:1058-1060``)
-                guarded = F.when(
-                    both & d1.isNotNull() & d2.isNotNull() & ~F.isnan(d1) & ~F.isnan(d2),
-                    diff,
-                )
-                aggs.append(F.max(guarded).alias(f"__maxdiff__{c}"))
+                cast_ok = d1.isNotNull() & d2.isNotNull() & ~F.isnan(d1) & ~F.isnan(d2)
+                if self.df1.schema[c].dataType == self.df2.schema[c].dataType:
+                    # Equal values of one type cast to one double: their
+                    # diff is 0 or NULL and cannot be the max, so they are
+                    # skipped before the casts run (on a text column each
+                    # cast is a failed double parse). Equal infinities,
+                    # whose inf - inf is NaN, are skipped too. Mixed-type
+                    # pairs keep the plain form: comparing them directly
+                    # adds an implicit cast that can raise under ANSI.
+                    diff = F.when(
+                        both & ~c1.eqNullSafe(c2),
+                        F.when(cast_ok, F.abs(d1 - d2)),
+                    )
+                else:
+                    diff = F.when(both & cast_ok, F.abs(d1 - d2))
+                aggs.append(F.max(diff).alias(f"__maxdiff__{c}"))
         return aggs
 
     @cached_property

@@ -1401,7 +1401,10 @@ def semantic_decontaminate(
 
     Returns ``(id_col, max_eval_cosine, contaminated)`` — one row per
     corpus row; ``max_eval_cosine`` is NULL (and ``contaminated`` false)
-    when the corpus vector is NULL/zero-norm or the eval set is empty.
+    when the corpus vector is NULL/zero-norm, holds a NULL element or has
+    a length other than the eval vectors', or when the eval set is empty.
+    Eval vectors that are NULL or hold a NULL element are skipped; eval
+    vectors of differing lengths raise ``ValueError``.
 
     Scale shape: the eval side is SMALL by construction (benchmark suites
     are thousands of vectors, the corpus is billions), so it is collected
@@ -1417,9 +1420,9 @@ def semantic_decontaminate(
     DuckDB twin — the :func:`~datacompy_spark.functions.vector.dot_arrow`
     precedent). Only (id, vector) enter the Python boundary; ZERO
     shuffles, no groupBy state, so the operator stays legal on an
-    unbounded stream in append mode. Fixed-length vectors only
-    (embeddings); for very large eval sets, prefilter candidates with the
-    int8 route (:func:`knn_int8_rerank`) before the exact pass."""
+    unbounded stream in append mode. For very large eval sets, prefilter
+    candidates with the int8 route (:func:`knn_int8_rerank`) before the
+    exact pass."""
     evc = eval_vec_col or vec_col
     ev_rows = (
         eval_df.filter(F.col(evc).isNotNull()).select(F.col(evc)).collect()
@@ -1429,17 +1432,28 @@ def semantic_decontaminate(
         F.lit(None).cast("double").alias("max_eval_cosine"),
         F.lit(False).alias("contaminated"),
     ]
-    if not ev_rows:
+    # an eval vector with a NULL element scores NULL against every corpus
+    # row, so it is skipped like a NULL one
+    ev_vecs = [list(r[0]) for r in ev_rows if None not in r[0]]
+    dims = sorted({len(v) for v in ev_vecs})
+    if len(dims) > 1:
+        raise ValueError(
+            f"semantic_decontaminate: eval vectors in {evc!r} must share one "
+            f"length; found lengths {dims}"
+        )
+    if not ev_vecs:
         # empty eval set: every row is NULL / not contaminated (matches the
         # old broadcast-row form: array_max over an empty array)
         return corpus.select(*null_out)
 
     import numpy as np
 
-    E = np.array([list(r[0]) for r in ev_rows], dtype=np.float64)
+    E = np.array(ev_vecs, dtype=np.float64)
+    dim = E.shape[1]
 
     def score_batches(it):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         # eval norms once per task, engine fold order (column-at-a-time:
         # each eval's norm accumulates its squared dims in index order)
@@ -1448,16 +1462,26 @@ def semantic_decontaminate(
             en_acc += E[:, j] * E[:, j]
         en = np.sqrt(en_acc)
         for batch in it:
-            ids = batch.column(0)
-            va = batch.column(1).to_numpy(zero_copy_only=False)
-            n = len(va)
+            ids, vecs = batch.column(0), batch.column(1)
+            n = len(vecs)
             vals = np.full(n, np.nan, dtype=np.float64)
             isnull = np.ones(n, dtype=bool)
-            live = np.fromiter(
-                (x is not None for x in va), dtype=bool, count=n
+            # Only complete vectors of the eval dimension score; a NULL
+            # vector, a NULL element or another length leaves the row NULL
+            # (to_numpy would turn a NULL element into NaN, which ranks
+            # above everything). flat holds the elements of the non-NULL
+            # vectors in row order.
+            lens = pc.fill_null(pc.list_value_length(vecs), -1).to_numpy()
+            flat = pc.list_flatten(vecs)
+            nulls_before = np.concatenate(
+                [[0], np.cumsum(flat.is_null().to_numpy(zero_copy_only=False))]
             )
+            ends = np.cumsum(np.maximum(lens, 0))
+            starts = ends - np.maximum(lens, 0)
+            live = (lens == dim) & (nulls_before[ends] == nulls_before[starts])
             if live.any():
-                V = np.stack(va[live]).astype(np.float64)
+                at = starts[live][:, None] + np.arange(dim)
+                V = flat.to_numpy(zero_copy_only=False)[at].astype(np.float64)
                 # dots: column-at-a-time accumulation = the sequential
                 # left-to-right double fold of functions.vector.dot, per
                 # (row, eval) pair, vectorized across the batch×eval plane
@@ -1519,11 +1543,17 @@ def semantic_decontaminate_sql(
     from datacompy_spark.functions.vector import cosine_sql
 
     evc = eval_vec_col or vec_col
-    cos = cosine_sql(f"c.{vec_col}", f"e.{evc}", dim)
+    # list_sum skips NULL products and out-of-range reads, so incomplete
+    # or other-length corpus vectors are NULLed explicitly
+    cos = (
+        f"CASE WHEN len(c.{vec_col}) = {dim} AND list_count(c.{vec_col}) = {dim}"
+        f" THEN {cosine_sql(f'c.{vec_col}', f'e.{evc}', dim)} END"
+    )
     return f"""
 SELECT c.{id_col},
   max({cos}) AS max_eval_cosine,
   coalesce(max({cos}) >= {threshold}::DOUBLE, false) AS contaminated
 FROM {corpus_table} c
-LEFT JOIN (SELECT * FROM {eval_table} WHERE {evc} IS NOT NULL) e ON TRUE
+LEFT JOIN (SELECT * FROM {eval_table}
+           WHERE {evc} IS NOT NULL AND list_count({evc}) = len({evc})) e ON TRUE
 GROUP BY c.{id_col}"""

@@ -73,6 +73,89 @@ class TestBasics:
         assert st["name"]["all_match"]
 
 
+#: ``column_stats`` max_diff per column of the ``maxdiff_pair`` frame
+MAXDIFF_EXPECTED = {
+    "id": 0.0,
+    "s_num": 0.5,      # "1.5" vs "2.0"
+    "s_sci": 0.0,      # "1e3" vs "1000", "2.50" vs "2.5": unequal text, same double
+    "s_txt": 0.0,      # non-numeric text casts to NULL
+    "f_nan": 0.0,      # NaN vs NaN skipped
+    "f_nan_num": 0.25,  # NaN vs 2.0 skipped; 1.0 vs 1.25 counted
+    "f_zero": 0.0,     # -0.0 vs 0.0
+    "f_null": 2.0,     # NULL on one side skipped; 1.0 vs 3.0 counted
+    "b": 1.0,          # True vs False
+    "dec": 0.25,       # 1.25 vs 1.00
+    "eq_i": 0.0,       # equal on every row
+    "mix_id": 0.5,     # int 1 vs double 1.5
+    "mix_sd": 0.5,     # string "2.5" vs double 2.0; "abc" skipped
+}
+
+
+@pytest.fixture()
+def maxdiff_pair(spark):
+    from decimal import Decimal
+
+    nan = float("nan")
+    left = [
+        (1, "1.5", "1e3", "A", nan, nan, -0.0, None, True, Decimal("1.25"), 7, 1, "2.5"),
+        (2, "3", "2.50", "x", 1.0, 1.0, 0.0, 1.0, True, Decimal("2.00"), 8, 2, "abc"),
+        (3, None, "5", None, nan, 3.0, 1.0, 2.0, None, None, 9, None, None),
+        (4, "4", "4", "y", 4.0, 4.0, 4.0, 4.0, False, Decimal("4.00"), 4, 4, "4"),
+        # unique rows: never part of max_diff
+        (5, "900", "900", "z", 9e9, 9e9, 9e9, 9e9, True, Decimal("900.00"), 900, 900, "900"),
+    ]
+    right = [
+        (1, "2.0", "1000", "B", nan, 2.0, 0.0, 5.0, False, Decimal("1.00"), 7, 1.5, 2.0),
+        (2, "3", "2.5", "x", 1.0, 1.25, -0.0, 3.0, True, Decimal("2.00"), 8, 2.0, 1.0),
+        (3, "4", "5", "x", nan, 3.0, 1.0, None, False, Decimal("1.00"), 9, 3.0, None),
+        (4, "4", "4", "y", 4.0, 4.0, 4.0, 4.0, False, Decimal("4.00"), 4, 4.0, 4.0),
+        (6, "-900", "-900", "w", -9e9, -9e9, -9e9, -9e9, False, Decimal("-900.00"), -900, -900.0, -900.0),
+    ]
+    common = ("id bigint, s_num string, s_sci string, s_txt string, f_nan double, "
+              "f_nan_num double, f_zero double, f_null double, b boolean, "
+              "dec decimal(10,2), eq_i int")
+    df1 = spark.createDataFrame(left, common + ", mix_id int, mix_sd string")
+    df2 = spark.createDataFrame(right, common + ", mix_id double, mix_sd double")
+    return df1, df2
+
+
+def _max_diff_by_route(spark, df1, df2) -> dict:
+    """``{route: {column: max_diff}}`` from both statistics routes: the
+    ``observe`` metrics on the report's exceptions populate, and the
+    standalone aggregate behind ``matches()``/``column_stats``."""
+    observed = SparkCompare(spark, df1, df2, join_columns="id")
+    observed._ensure_cached()
+    assert "_stats" in observed.__dict__, "stats did not ride the populate"
+    standalone = SparkCompare(spark, df1, df2, join_columns="id")
+    out = {
+        route: {s["column"]: s["max_diff"] for s in c.column_stats}
+        for route, c in (("observe", observed), ("standalone", standalone))
+    }
+    observed.uncache()
+    return out
+
+
+class TestMaxDiffSemantics:
+    """``max_diff`` is max(abs(try_cast(c1) - try_cast(c2))) over the
+    intersect rows, skipping NULL and NaN casts (ref ``spark.py:1026-1067``);
+    both statistics routes must produce the pinned values."""
+
+    def test_max_diff_pinned_on_both_stats_routes(self, spark, maxdiff_pair):
+        for route, got in _max_diff_by_route(spark, *maxdiff_pair).items():
+            assert got == MAXDIFF_EXPECTED, route
+            assert all(isinstance(v, float) for v in got.values()), route
+
+    def test_equal_infinities_add_nothing(self, spark):
+        # a matching pair of infinities is skipped like any equal pair; its
+        # inf - inf NaN would otherwise rank above every real diff
+        inf = float("inf")
+        schema = "id bigint, d double, s string"
+        df1 = spark.createDataFrame([(1, inf, "Infinity"), (2, 1.0, "1")], schema)
+        df2 = spark.createDataFrame([(1, inf, "Infinity"), (2, 1.5, "3")], schema)
+        for route, got in _max_diff_by_route(spark, df1, df2).items():
+            assert got == {"id": 0.0, "d": 0.5, "s": 2.0}, route
+
+
 class TestColumnSets:
     def test_unique_columns(self, spark):
         df1 = spark.createDataFrame([(1, "x", 9)], "id bigint, shared string, only_1 int")

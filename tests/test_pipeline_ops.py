@@ -1823,6 +1823,73 @@ class TestSemanticDecontaminate:
         assert r["max_eval_cosine"] == pytest.approx(0.8)
         assert r["contaminated"]
 
+    def test_incomplete_corpus_vectors_match_duckdb_twin(self, spark):
+        import duckdb
+        import pyarrow as pa
+
+        from datacompy_spark.operators.similarity import (
+            semantic_decontaminate,
+            semantic_decontaminate_sql,
+        )
+
+        corpus_rows = [
+            (1, [1.0, 0.0, 0.0]),      # exact copy of an eval vector
+            (2, [1.0, None, 0.0]),     # NULL element
+            (3, [None, None, None]),   # only NULL elements
+            (4, [1.0, 0.0]),           # shorter than the eval vectors
+            (5, [1.0, 0.0, 0.0, 0.0]),  # longer than the eval vectors
+            (6, None),                 # NULL vector
+            (7, [3.0, 4.0, 0.0]),      # cos 0.8 to (0, 1, 0)
+        ]
+        eval_rows = [
+            [1.0, 0.0, 0.0],
+            [0.0, 1.0, 0.0],
+            [0.0, None, 1.0],  # NULL element: skipped, never ranks
+            None,
+        ]
+        corpus = spark.createDataFrame(
+            corpus_rows, "vec_id bigint, embedding array<double>"
+        )
+        eval_df = spark.createDataFrame(
+            [(v,) for v in eval_rows], "embedding array<double>"
+        )
+        got = {
+            r["vec_id"]: (r["max_eval_cosine"], r["contaminated"])
+            for r in semantic_decontaminate(
+                corpus, "vec_id", "embedding", eval_df, threshold=0.9
+            ).collect()
+        }
+        vec = pa.list_(pa.float64())
+        con = duckdb.connect()
+        con.register("corpus", pa.table({
+            "vec_id": pa.array([i for i, _ in corpus_rows], pa.int64()),
+            "embedding": pa.array([v for _, v in corpus_rows], vec),
+        }))
+        con.register("evalset", pa.table({"embedding": pa.array(eval_rows, vec)}))
+        want = {
+            i: (m, c)
+            for i, m, c in con.execute(semantic_decontaminate_sql(
+                "corpus", "vec_id", "embedding", "evalset", dim=3, threshold=0.9
+            )).fetchall()
+        }
+        assert got == want
+        assert got[1] == (1.0, True)
+        assert got[7] == (pytest.approx(0.8), False)
+        for i in (2, 3, 4, 5, 6):
+            assert got[i] == (None, False), i
+
+    def test_ragged_eval_set_raises(self, spark):
+        from datacompy_spark.operators.similarity import semantic_decontaminate
+
+        corpus = spark.createDataFrame(
+            [(1, [1.0, 0.0])], "vec_id bigint, embedding array<double>"
+        )
+        eval_df = spark.createDataFrame(
+            [([1.0, 0.0],), ([1.0, 0.0, 0.0],)], "embedding array<double>"
+        )
+        with pytest.raises(ValueError, match=r"found lengths \[2, 3\]"):
+            semantic_decontaminate(corpus, "vec_id", "embedding", eval_df)
+
 
 class TestRemoveDupSpans:
     def test_later_copy_cut_first_kept(self, spark):

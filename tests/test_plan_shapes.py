@@ -260,6 +260,47 @@ class TestOnePassReportStats:
         assert "InMemoryTableScan" not in plan_of(c.df1_unq_rows)
 
 
+def _jseq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _try_casts_guarded(expr, guarded: bool = False) -> list:
+    """One flag per ``try_cast`` under ``expr`` (a JVM Catalyst
+    expression): True when it sits in the value of a CASE branch whose
+    condition is a conjunction holding ``NOT (a <=> b)``."""
+
+    def is_guard(cond) -> bool:
+        if cond.nodeName() == "And":
+            return any(is_guard(k) for k in _jseq(cond.children()))
+        return cond.nodeName() == "Not" and cond.child().nodeName() == "EqualNullSafe"
+
+    flags = [guarded] if expr.prettyName() == "try_cast" else []
+    kids = _jseq(expr.children())
+    n_branch_kids = 2 * expr.branches().size() if expr.nodeName() == "CaseWhen" else 0
+    for i, kid in enumerate(kids):
+        in_value = i < n_branch_kids and i % 2 == 1
+        flags += _try_casts_guarded(kid, guarded or (in_value and is_guard(kids[i - 1])))
+    return flags
+
+
+class TestMaxDiffCastGuard:
+    """``max_diff`` casts both sides to double on every row it evaluates;
+    on a text column each cast is a failed parse. For a same-typed pair the
+    casts must run only on rows whose raw values differ (``NOT (a <=> b)``);
+    a mixed-type pair keeps the unguarded form."""
+
+    def test_same_typed_string_casts_sit_under_the_guard(self, spark):
+        df1 = spark.createDataFrame([(1, "a", "1")], "id bigint, s string, m string")
+        df2 = spark.createDataFrame([(1, "b", 1.0)], "id bigint, s string, m double")
+        c = SparkCompare(spark, df1, df2, join_columns="id")
+        plan = c._outer.agg(*c._stat_aggs())._jdf.queryExecution().optimizedPlan()
+        aggs = {e.name(): e for e in _jseq(plan.aggregateExpressions())}
+        same = _try_casts_guarded(aggs["__maxdiff__s"])
+        mixed = _try_casts_guarded(aggs["__maxdiff__m"])
+        assert same and all(same), aggs["__maxdiff__s"].toString()
+        assert mixed and not any(mixed), aggs["__maxdiff__m"].toString()
+
+
 class TestSingleLineageMaterialization:
     """r14 advice: ``collapse_exact_content(eager=False)`` relies on the
     caller's FIRST action being a single-lineage descendant that populates

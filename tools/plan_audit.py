@@ -8,6 +8,9 @@ or an Exchange count that grew since the last audit, is a regression even
 while results stay correct.
 
 Usage: python tools/plan_audit.py [sf_dir] [--write]
+  sf_dir defaults to the scale named in PLANS.md's header, the scale its
+  fingerprints were generated at (a gate run at another scale can drift
+  with no code change).
   --write regenerates PLANS.md from the audit table.
   Without --write the run is a GATE: it fails (exit 1) if any query's
   plan-shape fingerprint differs from the committed PLANS.md — an
@@ -17,7 +20,7 @@ Usage: python tools/plan_audit.py [sf_dir] [--write]
 Notes: queries are BUILT, not executed (no .count()), but a few operators
 materialize sketch frames at build time (documented persist-before-self-join
 in dedup) and streaming queries execute their bounded micro-batches when
-built — the audit therefore runs at the smallest scale by default.
+built.
 """
 
 from __future__ import annotations
@@ -367,12 +370,29 @@ def render(rows, sf_dir: str) -> str:
     return "\n".join(out)
 
 
+def committed_scale(path: str) -> str | None:
+    """The sf_dir named in a committed PLANS.md header; None if the file
+    is missing or its header names none."""
+    import re
+
+    try:
+        with open(path) as fh:
+            m = re.search(r"^Generated by `tools/plan_audit.py` at `([^`]+)`", fh.read(), re.M)
+    except OSError:
+        return None
+    return m.group(1) if m else None
+
+
 def main() -> int:
-    sf_dir = "/root/testdata/sf0.001"
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
+    )
     write = "--write" in sys.argv
     args = [a for a in sys.argv[1:] if a != "--write"]
-    if args:
-        sf_dir = args[0]
+    sf_dir = args[0] if args else committed_scale(path)
+    if not sf_dir:
+        print("PLANS.md names no scale — pass sf_dir explicitly")
+        return 2
 
     from pyspark.sql import SparkSession
 
@@ -395,9 +415,6 @@ def main() -> int:
     errs = [r for r in rows if r.get("error")]
     text = render(rows, sf_dir)
     print(text)
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
-    )
     # fingerprint regression gate (r12 verdict item 7): diff the fresh
     # audit against the committed PLANS.md. Without --write, ANY drift
     # fails — "zero hot-path code changed, plans identical" becomes a
